@@ -31,6 +31,8 @@ SCRAPE_MS = 15_000
 T0_MS = 1_767_229_200_000
 INSTANCES = 100
 JOB = "node"
+#: job of the fresh instance each write adds (registry churn)
+CHURN_JOB = "churn"
 
 # (metric, kind, extra labels) per fake instance: 20 series in the shape of
 # a small node_exporter scrape
@@ -89,23 +91,23 @@ class Series:
         return dict(self.labels).get(name, "")
 
 
-def _template() -> list[TimeSeries]:
+def _template(job: str) -> list[TimeSeries]:
     out = []
     for metric, _kind, extra in _FAMILY:
-        labels = [Label("__name__", metric), Label("job", JOB)]
+        labels = [Label("__name__", metric), Label("job", job)]
         labels += [Label(k, v) for k, v in extra.items()]
         out.append(TimeSeries(labels=labels, samples=[]))
     return out
 
 
-def instance_series(instance_ids: list[int], seed: int) -> list[Series]:
+def instance_series(instance_ids: list[int], seed: int, job: str = JOB) -> list[Series]:
     """The series of the given fake instances. Label sets come from
     ``edge.faker.fan_out`` (the fake_exporter fan-out); each instance's
     slopes and means are drawn from ``seed`` and the instance id, so a
-    replaced instance gets fresh parameters and the same id always gets
-    the same ones."""
+    new instance gets fresh parameters and the same id always gets the
+    same ones."""
     kinds = [kind for _m, kind, _e in _FAMILY]
-    fanned = list(fan_out(_template(), instances=max(instance_ids) + 1))
+    fanned = list(fan_out(_template(job), instances=max(instance_ids) + 1))
     out: list[Series] = []
     for i in instance_ids:
         rng = random.Random(seed * 1_000_003 + i)

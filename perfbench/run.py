@@ -1,11 +1,10 @@
 """Adapter benchmark: one workload per invocation, run from the repository root.
 
-    python3 perfbench/run.py --workload {ingest,serve,analytics} \
+    python3 perfbench/run.py --workload {serve,analytics} \
         --seed N --seconds S --trace {0,1}
 
 Workloads (see BENCHMARK.json for why each one exists):
 
-- ``ingest``    remote-write 1.0, 100k samples per request, 100 fake instances
 - ``serve``     a preloaded store and a repeating read/write/PromQL cycle
 - ``analytics`` the 13 headline registry queries of bench.py (noop sink)
 
@@ -75,7 +74,7 @@ def _steal_s() -> float:
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True, choices=("ingest", "serve", "analytics"))
+    ap.add_argument("--workload", required=True, choices=("serve", "analytics"))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)

@@ -1,4 +1,4 @@
-"""The three workloads, driven through the program's public entry points:
+"""The two workloads, driven through the program's public entry points:
 the WSGI app from ``edge.http.create_app`` over a
 ``storage.parquet.SparkParquetStorage`` (through Flask's test client) and
 the ``workloads.QUERIES`` registry through the noop sink.
@@ -15,6 +15,7 @@ import glob
 import math
 import os
 import random
+import subprocess
 import sys
 import threading
 import time
@@ -25,14 +26,12 @@ import wire
 from statistics import median, median_low
 from tracing import Tracer
 
-#: samples per remote-write request (the reference's max_samples_per_send)
-INGEST_BATCH = 100_000
-#: samples per small remote-write on serve (Prometheus's default batch)
-SMALL_BATCH = 2_000
 PRELOAD_HOURS = 1
-SETUPS = 5
-#: scale factor of the generated analytics tables (sf0.01: 60k lineitem rows)
-ANALYTICS_SF = 0.01
+#: set-up rounds per run; analytics' are shorter and jitter more, so more
+SERVE_SETUPS = 7
+ANALYTICS_SETUPS = 9
+#: scale factor of the generated analytics tables (sf0.1: 600k lineitem rows)
+ANALYTICS_SF = 0.1
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CT_V1 = "application/x-protobuf"
 WRITE_HEADERS = {"Content-Encoding": "snappy", "X-Prometheus-Remote-Write-Version": "0.1.0"}
@@ -87,9 +86,11 @@ class Run:
         )
         return self.spark
 
-    def restart_spark(self):
-        self.spark.stop()
-        return self.start_spark()
+    def clear_job_group(self) -> None:
+        """Later jobs on this thread belong to no request."""
+        sc = self.spark.sparkContext
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
     def check(self, ok: bool, what: str) -> bool:
         """Count one answer check; a failed one is a failed operation."""
@@ -144,6 +145,7 @@ class Client:
                 resp = self.http.open(path, **kw)
                 body = resp.get_data()
             dt = time.perf_counter() - t0
+            self.run.clear_job_group()
         self.lat.setdefault(op, []).append(dt)
         return resp.status_code, body
 
@@ -226,7 +228,7 @@ def install_protocol_tracer(tracer: Tracer, spark) -> None:
 
 
 def protocol_layers(run: Run, tracer: Tracer, client: Client) -> dict:
-    """Per-layer metrics from the traced phase of ingest or serve: the
+    """Per-layer metrics from the traced phase of serve: the
     median over the requests that call a layer of its per-request time."""
     reqs = tracer.by_request()
     op_of = {rid: "query_range" if op.startswith("qr_") else op for rid, op in client.groups}
@@ -285,25 +287,26 @@ def protocol_layers(run: Run, tracer: Tracer, client: Client) -> dict:
 
 
 class Protocol:
-    """State shared by ingest and serve: the series written so far and the
-    store that holds them."""
+    """The series written so far and the store that holds them.
 
-    def __init__(self, run: Run, instance_ids: list[int]):
+    Every write carries the next scrapes of the steady series (100
+    instances under ``job="node"``) and the first scrape of one fresh
+    instance under ``job="churn"``, so each write also appends 20 series
+    to the registry, as instance churn does. Reads and queries select
+    ``job="node"``."""
+
+    def __init__(self, run: Run):
         self.run = run
         self.root = os.path.join(run.work, "store")
-        self.active = list(instance_ids)
-        self.series = {s.labels: s for s in lg.instance_series(self.active, run.seed)}
-        self.first_k = {s: 0 for s in self.series}  # first scrape written
+        self.series = lg.instance_series(list(range(lg.INSTANCES)), run.seed)
+        self.next_churn = lg.INSTANCES  # id of the next fresh instance
         self.k_next = 0  # next scrape index to write
         self.acked = 0
         self.acked_sum = 0.0
-        self.new_per_write: list[int] = []  # series written for the first time
+        self.written_series = 0  # distinct series acknowledged
+        self.new_per_write: list[int] = []  # registry growth per traced write
         self.store = None
         self.client: Client | None = None
-
-    def active_series(self) -> list[lg.Series]:
-        ids = {f"fake-{i}" for i in self.active}
-        return [s for s in self.series.values() if s.label("instance") in ids]
 
     def open(self) -> float:
         """Open the store and the app; returns the open time."""
@@ -316,107 +319,66 @@ class Protocol:
         self.client = Client(self.run, create_app(self.store), None)
         return dt
 
+    def registry_size(self) -> int:
+        """Series in the store's registry, read through its public frame."""
+        return self.store.registry_df().count()
+
     def write(self, scrapes: int, op: str = "write") -> None:
-        """POST one remote-write of ``scrapes`` scrapes of the active series."""
-        active = self.active_series()
-        body = lg.write_body(active, self.k_next, self.k_next + scrapes)
+        """POST one remote-write of ``scrapes`` scrapes of the steady series
+        plus one fresh churn instance. In a traced phase the registry is
+        counted before and after, outside the request."""
+        churn = lg.instance_series([self.next_churn], self.run.seed, job=lg.CHURN_JOB)
+        self.next_churn += 1
+        batch = self.series + churn
+        body = lg.write_body(batch, self.k_next, self.k_next + scrapes)
+        traced = self.client.tracer is not None
+        before = self.registry_size() if traced else 0
         status, _body = self.client.call(
             op, "write", "/write", method="POST", data=body,
             headers=WRITE_HEADERS, content_type=CT_V1,
         )
         if self.run.check(status == 200, f"/write answered {status}"):
-            self.new_per_write.append(sum(1 for s in active if self.first_k[s.labels] == self.k_next))
-            self.acked += scrapes * len(active)
+            if traced:
+                self.new_per_write.append(self.registry_size() - before)
+            self.acked += scrapes * len(batch)
             self.acked_sum += sum(
-                s.total(self.k_next + scrapes) - s.total(self.k_next) for s in active)
+                s.total(self.k_next + scrapes) - s.total(self.k_next) for s in batch)
+            self.written_series += len(churn)
         self.k_next += scrapes
 
     def readback(self) -> None:
-        """The samples read back equal the samples acknowledged."""
+        """The samples read back equal the samples acknowledged, and the
+        registry holds every series written, once."""
         from pyspark.sql import functions as F
 
         row = self.store.samples_df().agg(
             F.count("*").alias("n"), F.sum("value").alias("v"),
             F.countDistinct("fingerprint").alias("fps"),
         ).collect()[0]
+        registered = self.registry_size()
         self.run.attempted += 1
         self.run.check(row["n"] == self.acked, f"read back {row['n']} samples, acked {self.acked}")
         self.run.check(close(row["v"] or 0.0, self.acked_sum, 1e-9), "read-back value sum differs")
-        written = sum(1 for s in self.series if self.first_k[s] < self.k_next)
-        self.run.check(row["fps"] == written, f"read back {row['fps']} series, wrote {written}")
+        want = self.written_series
+        self.run.check(row["fps"] == want, f"read back {row['fps']} series, wrote {want}")
+        self.run.check(registered == want, f"registry holds {registered} series, wrote {want}")
 
 
-def setup_rounds(run: Run, open_and_warm) -> None:
-    """Set up ``SETUPS`` times: restart the Spark session, open the store
-    and serve a first request. setup_s is the median."""
-    for _ in range(SETUPS):
+def setup_rounds(run: Run, open_and_warm, rounds: int) -> None:
+    """Set up ``rounds`` times: stop the Spark session (untimed: that is
+    tear-down), then start a new one, open the store and serve a first
+    request. setup_s is the median."""
+    for _ in range(rounds):
         t0 = time.perf_counter()
-        run.restart_spark()
+        run.spark.stop()
         t1 = time.perf_counter()
-        open_s = open_and_warm()
+        run.start_spark()
         t2 = time.perf_counter()
-        run.setups.append({"total_s": t2 - t0, "session_s": t1 - t0, "open_s": open_s})
+        open_s = open_and_warm()
+        t3 = time.perf_counter()
+        run.setups.append({"total_s": t3 - t1, "stop_s": t1 - t0, "session_s": t2 - t1,
+                           "open_s": open_s})
     run.mark("setup")
-
-
-# ---------------------------------------------------------------- ingest
-
-
-def ingest(run: Run) -> dict:
-    """Remote-write 1.0 in the reference's load shape: 100k samples per
-    request over 100 fake instances, ~1% of instances replaced per request."""
-    rng = random.Random(run.seed)
-    p = Protocol(run, list(range(lg.INSTANCES)))
-    scrapes = INGEST_BATCH // (lg.INSTANCES * lg.SERIES_PER_INSTANCE)
-    next_id = lg.INSTANCES
-
-    def open_and_warm():
-        dt = p.open()
-        p.write(1, op="warmup")
-        return dt
-
-    setup_rounds(run, open_and_warm)
-
-    def churn():
-        nonlocal next_id
-        p.active[rng.randrange(len(p.active))] = next_id
-        for s in lg.instance_series([next_id], run.seed):
-            p.series[s.labels] = s
-            p.first_k[s.labels] = p.k_next
-        next_id += 1
-
-    def phase(tracer):
-        p.client = Client(run, p.client.http.application, tracer)
-        files0 = len(parquet_files(p.root, "samples"))
-        acked0, new0 = p.acked, len(p.new_per_write)
-        wall = 0.0
-        while wall < run.seconds:
-            churn()
-            t0 = time.perf_counter()
-            p.write(scrapes)
-            wall += time.perf_counter() - t0
-        lat = p.client.lat["write"]
-        return {
-            "client": p.client,
-            "lat": lat,
-            "samples": p.acked - acked0,
-            "files": len(parquet_files(p.root, "samples")) - files0,
-            "new_series": p.new_per_write[new0:],
-        }
-
-    res = measure(run, phase, protocol=True)
-    base = res["untraced"]
-    p.readback()
-    e2e = {
-        # one client in a closed loop: busy time is loop time less the
-        # client's own body encoding
-        "write_samples_per_s": (base["samples"] / sum(base["lat"]), "samples/s"),
-        "write_p50_s": (median(base["lat"]), "s"),
-        "bytes_per_sample": (parquet_bytes(p.root) / p.acked, "B"),
-    }
-    run.info["writes"] = len(base["lat"])
-    run.info["files_per_write"] = base["files"] / len(base["lat"])
-    return finish(run, res, e2e, "write", base["lat"], p)
 
 
 # ---------------------------------------------------------------- serve
@@ -432,7 +394,7 @@ def preload(p: Protocol, scrapes: int) -> None:
 
     spark = p.run.spark
     p.open()
-    series = p.active_series()
+    series = p.series
     p.store.write([
         TimeSeries(labels=[Label(n, v) for n, v in s.labels],
                    samples=[Sample(value=s.value(0), timestamp_ms=lg.T0_MS)])
@@ -454,20 +416,21 @@ def preload(p: Protocol, scrapes: int) -> None:
     p.k_next = scrapes
     p.acked = scrapes * len(series)
     p.acked_sum = sum(s.total(scrapes) for s in series)
+    p.written_series = len(series)
 
 
 def serve(run: Run) -> dict:
-    """A preloaded store and a repeating request cycle: one small write,
+    """A preloaded store and a repeating request cycle: one small write
+    (one scrape: 2,000 steady samples plus 20 of a fresh churn instance),
     four point reads, one wide and one streamed read, two range queries."""
     rng = random.Random(run.seed)
-    p = Protocol(run, list(range(lg.INSTANCES)))
+    p = Protocol(run)
     scrapes0 = PRELOAD_HOURS * 3600_000 // lg.SCRAPE_MS
-    small = SMALL_BATCH // (lg.INSTANCES * lg.SERIES_PER_INSTANCE)
     t0 = time.perf_counter()
     preload(p, scrapes0)
     run.mark("preload")
     run.layer["setup.preload_s"] = time.perf_counter() - t0
-    series = p.active_series()
+    series = p.series
     wide_metric = rng.choice([s.name for s in series if s.kind == "gauge"])
     cycle = ["write"] + ["read_point"] * 4 + ["read_wide", "read_stream", "qr_rate", "qr_gauge"]
     rng.shuffle(cycle)
@@ -487,16 +450,17 @@ def serve(run: Run) -> dict:
 
     def wide(op, streamed):
         end = last_ms() + 7_000
-        body = lg.read_body([(lg.T0_MS - 7_000, end, [("__name__", "=", wide_metric)])], streamed)
+        matchers = [("__name__", "=", wide_metric), ("job", "=", lg.JOB)]
+        body = lg.read_body([(lg.T0_MS - 7_000, end, matchers)], streamed)
         status, out = p.client.call(op, "read", "/read", method="POST", data=body,
                                     headers=READ_HEADERS, content_type=CT_V1)
         pending.append((op, p.k_next - 1, (lg.T0_MS - 7_000, end), status, out))
 
     def query_range(op):
         if op == "qr_rate":
-            q = "sum by (mode) (rate(node_cpu_seconds_total[5m]))"
+            q = f'sum by (mode) (rate(node_cpu_seconds_total{{job="{lg.JOB}"}}[5m]))'
         else:
-            q = "avg_over_time(node_memory_MemAvailable_bytes[5m])"
+            q = f'avg_over_time(node_memory_MemAvailable_bytes{{job="{lg.JOB}"}}[5m])'
         # the last 30 minutes: every 5m window lies inside the preload
         end = (last_ms() // 60_000) * 60_000
         start = end - 30 * 60_000
@@ -507,7 +471,7 @@ def serve(run: Run) -> dict:
 
     def run_op(op):
         if op == "write":
-            p.write(small)
+            p.write(1)
         elif op == "read_point":
             point()
         elif op in ("read_wide", "read_stream"):
@@ -520,29 +484,30 @@ def serve(run: Run) -> dict:
         point(op="warmup")
         return dt
 
-    setup_rounds(run, open_and_warm)
-    # two untimed cycles: the first compiles every request type, and the
-    # second still runs ~20% slower than the ones after it
-    for op in cycle * 2:
+    # one untimed cycle compiles every request type
+    for op in cycle:
         run_op(op)
     run.mark("warm")
 
-    def phase(tracer):
+    def phase(tracer, seconds):
         p.client = Client(run, p.client.http.application, tracer)
         files0 = len(parquet_files(p.root, "samples"))
-        new0 = len(p.new_per_write)
         wall, cycles = 0.0, []
-        while wall < run.seconds:
+        while wall < seconds:
             t0 = time.perf_counter()
             for op in cycle:
                 run_op(op)
             cycles.append(time.perf_counter() - t0)
             wall += cycles[-1]
         return {"client": p.client, "lat": cycles,
-                "files": len(parquet_files(p.root, "samples")) - files0,
-                "new_series": p.new_per_write[new0:]}
+                "files": len(parquet_files(p.root, "samples")) - files0}
 
     res = measure(run, phase, protocol=True)
+    if run.trace:  # the job counts live in the session the rounds stop
+        protocol_trace(run, res, p)
+    # last, so that they time a JVM that has served each request and the
+    # measured cycles do not follow a fresh session
+    setup_rounds(run, open_and_warm, SERVE_SETUPS)
     for item in pending:
         check_serve(run, p, wide_metric, *item)
     p.readback()
@@ -580,7 +545,7 @@ def check_serve(run: Run, p: Protocol, wide_metric: str, op, k_last, arg, status
             start, end = arg
             (got,) = wire.sampled_response(body)
             n = len(lg.scrapes_in(0, k_last, start, end))
-            want = {s.label("instance"): s for s in p.active_series() if s.name == wide_metric}
+            want = {s.label("instance"): s for s in p.series if s.name == wide_metric}
             ok = len(got) == len(want)
             for labels, samples in got:
                 s = want.get(labels.get("instance"))
@@ -593,8 +558,8 @@ def check_serve(run: Run, p: Protocol, wide_metric: str, op, k_last, arg, status
             n = len(lg.scrapes_in(0, k_last, start, end))
             last = lg.T0_MS + (n - 1) * lg.SCRAPE_MS
             ok = len(got) == lg.INSTANCES and len({g[1]["instance"] for g in got}) == lg.INSTANCES
-            ok = ok and all(g[1]["__name__"] == wide_metric and g[2] == n and g[3] == lg.T0_MS
-                            and g[4] == last for g in got)
+            ok = ok and all(g[1]["__name__"] == wide_metric and g[1]["job"] == lg.JOB
+                            and g[2] == n and g[3] == lg.T0_MS and g[4] == last for g in got)
             run.check(ok, f"{op}: wrong series or sample counts")
         else:
             check_query_range(run, p, op, k_last, arg, body)
@@ -608,7 +573,7 @@ def check_query_range(run: Run, p: Protocol, op, k_last, arg, body) -> None:
     start, end = arg
     res = json.loads(body)["data"]["result"]
     steps = list(range(start, end + 1, 60_000))
-    series = p.active_series()
+    series = p.series
     if op == "qr_rate":
         want = {}
         for s in series:
@@ -640,17 +605,23 @@ def check_query_range(run: Run, p: Protocol, op, k_last, arg, body) -> None:
 
 def analytics(run: Run) -> dict:
     """The 13 headline registry queries of ``bench.py`` through the noop
-    sink: a pass that checks every answer, an untimed pass, then timed
-    passes. (The 4 extended queries would more than double the run.)"""
+    sink: a pass that checks every answer, the timed passes, then the
+    set-up rounds. (The 4 extended queries would more than double the
+    run.)"""
     sys.path.insert(0, os.path.join(ROOT, "tools"))
     import bench
-    import gen_sf
     from promhouse_spark.session import load_table
     from promhouse_spark.workloads import QUERIES, llmdata
 
     sf_dir = os.path.join(run.work, "sf")
-    with contextlib.redirect_stdout(sys.stderr):
-        gen_sf.generate(sf_dir, ANALYTICS_SF, seed=run.seed)
+    # in a child process, so that the generator's buffers stay out of the
+    # driver's resident set
+    subprocess.run(
+        [sys.executable, "-c", "import sys, gen_sf; gen_sf.generate("
+         "sys.argv[1], float(sys.argv[2]), seed=int(sys.argv[3]))",
+         sf_dir, str(ANALYTICS_SF), str(run.seed)],
+        cwd=os.path.join(ROOT, "tools"), stdout=sys.stderr, check=True)
+    run.mark("data")
     # the two LSH queries stage MinHash signatures under a fixed scratch
     # path; keep that inside the run's work directory
     stage = os.path.join(run.work, "oracle-staging")
@@ -663,10 +634,6 @@ def analytics(run: Run) -> dict:
         t0 = time.perf_counter()
         load_table(run.spark, sf_dir, "lineitem").count()
         return time.perf_counter() - t0
-
-    setup_rounds(run, open_and_warm)
-    check_oracles(run, names, sf_dir, stage, fixed_stage)
-    run.mark("oracle")
 
     def one_pass(times: dict[str, list[float]], jobs: dict[str, str] | None) -> float:
         wall = 0.0
@@ -685,16 +652,16 @@ def analytics(run: Run) -> dict:
             wall += dt
         return wall
 
-    # the answer-checking pass compiles every plan; one more untimed pass
-    # takes the steepest part of the JIT warm-up out of the timed ones
-    one_pass({n: [] for n in names}, None)
-    run.mark("warm")
+    # the answer-checking pass also compiles every plan
+    check_oracles(run, names, sf_dir, stage, fixed_stage)
+    release_memory()
+    run.mark("oracle")
 
-    def phase(tracer):
+    def phase(tracer, seconds):
         times: dict[str, list[float]] = {n: [] for n in names}
         jobs: dict[str, str] = {}
         wall = 0.0
-        while wall < run.seconds:
+        while wall < seconds:
             wall += one_pass(times, jobs if tracer is not None else None)
         med = {n: median_low(v) for n, v in times.items()}
         return {"lat": [sum(med.values())], "med": med, "jobs": jobs,
@@ -711,31 +678,49 @@ def analytics(run: Run) -> dict:
         for n in names:
             run.layer[f"analytics.{n}_s"] = traced["med"][n]
             run.layer[f"analytics.{n}.jobs"] = counts[traced["jobs"][n]][0]
+    # last: queries write nothing, so the store the rounds open is the same
+    # in every run, and they time a JVM that has run each query
+    setup_rounds(run, open_and_warm, ANALYTICS_SETUPS)
     return finish(run, res, e2e, "queries", res["untraced"]["lat"], None)
 
 
 def check_oracles(run: Run, names, sf_dir, stage, fixed_stage) -> None:
-    """Warm-up pass that checks each answer against its DuckDB twin (row
-    count and order-insensitive hash, as tools/check_oracle.py does); a
-    query without a twin gets a row-count check."""
+    """A pass that checks each answer against its DuckDB twin (row count,
+    columns and order-insensitive hash, as tools/check_oracle.py compares
+    them); a query without a twin gets a row-count check. DuckDB runs in
+    a child process (``oracle.py``), after every Spark query has staged
+    what the twins read."""
+    import json
+
     import __spark_entry__ as entry
-    import check_oracle
+    from check_oracle import table_hash
 
     queries = entry.queries()
-    oracles = entry.oracle_sql()
-    con = check_oracle.duckdb_con(sf_dir)
+    twinned = set(entry.oracle_sql())
+    got = {}
     for n in names:
         run.attempted += 1
         try:
-            if n in oracles:
-                sql = oracles[n].replace(fixed_stage, stage)
-                problems = check_oracle.compare_query(n, queries[n], sql, run.spark, con, sf_dir)
-                run.check(not problems, f"{n}: {'; '.join(problems)}"[:300])
-            else:
-                run.check(len(queries[n](run.spark, sf_dir).collect()) > 0, f"{n}: no rows")
+            df = queries[n](run.spark, sf_dir)
+            rows = [tuple(r) for r in df.collect()]
+            got[n] = {"columns": df.columns, "rows": len(rows),
+                      "hash": table_hash(df.columns, rows)}
         except Exception as e:  # noqa: BLE001 — a failing query is a failed operation
             run.check(False, f"{n}: {type(e).__name__}: {e}"[:300])
-    con.close()
+    child = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "perfbench", "oracle.py"), sf_dir, stage,
+         fixed_stage, *got], stdout=subprocess.PIPE, text=True)
+    want = {j["name"]: j for j in map(json.loads, child.stdout.splitlines())}
+    for n, g in got.items():
+        if n not in twinned:
+            run.check(g["rows"] > 0, f"{n}: no rows")
+        elif n not in want:
+            run.check(False, f"{n}: no DuckDB answer (oracle.py exited {child.returncode})")
+        else:
+            w = want[n]
+            diff = [k for k in ("rows", "columns", "hash") if g[k] != w[k]]
+            run.check(not diff, f"{n}: {', '.join(diff)} differ: spark {g['rows']} rows "
+                                f"{g['columns']}, duckdb {w['rows']} rows {w['columns']}"[:300])
 
 
 # ---------------------------------------------------------------- common
@@ -770,11 +755,26 @@ class PeakRss:
         self._sample()
 
 
+def release_memory() -> None:
+    """Hand the heap that the benchmark's own checks freed back to the
+    system, so that the driver's measured resident set holds live memory
+    only, not what the allocator kept."""
+    import ctypes
+    import gc
+
+    gc.collect()
+    with contextlib.suppress(OSError, AttributeError):
+        ctypes.CDLL("libc.so.6").malloc_trim(0)
+
+
 def measure(run: Run, phase, protocol: bool = False) -> dict:
-    """The untraced phase gives the end-to-end numbers; with tracing on, a
-    second, traced phase gives the per-layer numbers."""
+    """The untraced phase (``--seconds`` long) gives the end-to-end
+    numbers; with tracing on, a second, traced phase gives the per-layer
+    numbers, and a third, untraced again, brackets it, so that the tracing
+    overhead is not confused with the JVM getting faster as the run goes
+    on. The last two take half as long each."""
     with PeakRss() as rss:
-        out = {"untraced": phase(None)}
+        out = {"untraced": phase(None, run.seconds)}
     run.info["driver_rss_mb"] = rss.peak / 2**20
     run.mark("measure")
     if run.trace:
@@ -782,16 +782,26 @@ def measure(run: Run, phase, protocol: bool = False) -> dict:
         if protocol:
             install_protocol_tracer(tracer, run.spark)
         try:
-            out["traced"] = phase(tracer)
+            out["traced"] = phase(tracer, run.seconds / 2)
         finally:
             tracer.uninstall()
-            # later jobs (the answer checks) belong to no request
-            sc = run.spark.sparkContext
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+            run.clear_job_group()
         out["tracer"] = tracer
         run.mark("traced")
+        out["untraced_after"] = phase(None, run.seconds / 2)
+        run.mark("untraced")
     return out
+
+
+def protocol_trace(run: Run, res: dict, p: Protocol) -> None:
+    """Per-layer metrics of the traced serve phase; writes out its spans."""
+    traced, tracer = res["traced"], res["tracer"]
+    layers = protocol_layers(run, tracer, traced["client"])
+    writes = len(traced["client"].lat.get("write", ()))
+    layers["storage.files_per_write"] = traced["files"] / writes if writes else 0.0
+    layers["storage.new_series_per_write"] = median(p.new_per_write) if p.new_per_write else 0.0
+    run.layer.update(layers)
+    tracer.dump(os.path.join(run.work, "spans.jsonl"))
 
 
 def finish(run: Run, res: dict, e2e: dict, unit: str, lat: list[float], p: Protocol | None,
@@ -812,18 +822,9 @@ def finish(run: Run, res: dict, e2e: dict, unit: str, lat: list[float], p: Proto
     run.layer["storage.open_s"] = median([s["open_s"] for s in run.setups])
     if run.trace:
         traced = res["traced"]
-        base = median(res["untraced"]["lat"])
+        base = (median(res["untraced"]["lat"]) + median(res["untraced_after"]["lat"])) / 2
         run.layer["trace.overhead_ratio"] = median(traced["lat"]) / base - 1
         run.info["trace_overhead_s"] = median(traced["lat"]) - base
-        if p is not None:
-            tracer = res["tracer"]
-            layers = protocol_layers(run, tracer, traced["client"])
-            writes = len(traced["client"].lat.get("write", ()))
-            layers["storage.files_per_write"] = traced["files"] / writes if writes else 0.0
-            layers["storage.new_series_per_write"] = (
-                median(traced["new_series"]) if traced["new_series"] else 0.0)
-            run.layer.update(layers)
-            tracer.dump(os.path.join(run.work, "spans.jsonl"))
         run.info["spans"] = len(res["tracer"].spans)
     if p is not None:
         run.info["latencies_s"] = {
