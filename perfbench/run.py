@@ -29,7 +29,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
 #: gated end-to-end metrics, reported by every workload
-END_TO_END = {"setup_s": "s", "work_median_s": "s", "driver_rss_mb": "MB"}
+END_TO_END = {"setup_s": "s", "work_ref_s": "s", "driver_rss_mb": "MB"}
 
 _QUERIES = [
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
@@ -137,7 +137,7 @@ def main() -> int:
     record = {
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "nproc": scenarios.nproc(),
-        "master": f"local[{scenarios.nproc()}]", "jvm_cold_start_s": cold,
+        "master": f"local[{scenarios.SPARK_CORES}]", "jvm_cold_start_s": cold,
         "loadavg_before": load_before, "loadavg_after": load_after,
         "cpu_steal_s": _steal_s() - steal_before,
         "setups": run.setups, "timeline": run.timeline,

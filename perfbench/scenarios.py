@@ -37,6 +37,17 @@ CT_V1 = "application/x-protobuf"
 WRITE_HEADERS = {"Content-Encoding": "snappy", "X-Prometheus-Remote-Write-Version": "0.1.0"}
 READ_HEADERS = {"Content-Encoding": "snappy", "X-Prometheus-Remote-Read-Version": "0.1.0"}
 SPARK_OPS = ("write", "read_point", "read_wide", "read_stream", "query_range")
+#: Spark's task slots (local[N]). One: on a host that shares its CPUs with
+#: other guests, the parallel capacity a guest gets swings between about
+#: one core and all of them from minute to minute, and work spread over
+#: several cores takes up to twice as long when it is low (README.md).
+SPARK_CORES = 1
+#: the reference computation (``Run.reference``): 7**REF_POW in the JVM.
+#: REF_S is the time it takes at the reference speed: the mean of the
+#: faster half of its times in a run (``host_slowdown``), typical of a
+#: 4-vCPU VM of the host the benchmark was written on.
+REF_POW = 400_000
+REF_S = 0.040
 
 
 def nproc() -> int:
@@ -60,10 +71,31 @@ class Run:
     layer: dict = field(default_factory=dict)
     timeline: list = field(default_factory=list)
     t_start: float = field(default_factory=time.perf_counter)
+    calibrating: bool = False
+    calib: list[float] = field(default_factory=list)
 
     def mark(self, stage: str) -> None:
         """Record when a stage of the run ended (seconds since start)."""
         self.timeline.append((stage, round(time.perf_counter() - self.t_start, 2)))
+
+    def reference(self) -> float:
+        """Time the reference computation once. It is fixed code of the JDK,
+        which runs most of the program's work, that no change to the
+        program touches, so its time tells how fast the host runs at that
+        moment. Python is left out: the time of a pure-Python loop differs
+        by up to a fifth between processes on a quiet host."""
+        from pyspark import SparkContext
+
+        big = SparkContext._jvm.java.math.BigInteger
+        t0 = time.perf_counter()
+        big.valueOf(7).pow(REF_POW).bitLength()
+        return time.perf_counter() - t0
+
+    def calibrate(self) -> None:
+        """In the untraced measured phase, time the reference computation
+        between two timed operations."""
+        if self.calibrating:
+            self.calib.append(self.reference())
 
     # ------------------------------------------------------------ spark
 
@@ -74,7 +106,7 @@ class Run:
         os.makedirs(jtmp, exist_ok=True)
         self.spark = get_spark(
             app_name="perfbench",
-            cpus=nproc(),
+            cpus=SPARK_CORES,
             extra_conf={
                 "spark.local.dir": os.path.join(self.work, "spark-local"),
                 "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={jtmp}",
@@ -130,6 +162,7 @@ class Client:
     def call(self, op: str, kind: str, path: str, **kw):
         """One request, timed from send until the body is fully read."""
         self.run.attempted += 1
+        self.run.calibrate()
         tracer = self.tracer
         if tracer is None:
             t0 = time.perf_counter()
@@ -367,8 +400,10 @@ class Protocol:
 def setup_rounds(run: Run, open_and_warm, rounds: int) -> None:
     """Set up ``rounds`` times: stop the Spark session (untimed: that is
     tear-down), then start a new one, open the store and serve a first
-    request. setup_s is the median."""
+    request. setup_s is the median, at the reference speed; the reference
+    computation is timed before each round."""
     for _ in range(rounds):
+        run.calib.append(run.reference())
         t0 = time.perf_counter()
         run.spark.stop()
         t1 = time.perf_counter()
@@ -494,10 +529,11 @@ def serve(run: Run) -> dict:
         files0 = len(parquet_files(p.root, "samples"))
         wall, cycles = 0.0, []
         while wall < seconds:
-            t0 = time.perf_counter()
+            t0, calib = time.perf_counter(), len(run.calib)
             for op in cycle:
                 run_op(op)
-            cycles.append(time.perf_counter() - t0)
+            # less the reference computations timed between the requests
+            cycles.append(time.perf_counter() - t0 - sum(run.calib[calib:]))
             wall += cycles[-1]
         return {"client": p.client, "lat": cycles,
                 "files": len(parquet_files(p.root, "samples")) - files0}
@@ -639,6 +675,7 @@ def analytics(run: Run) -> dict:
         wall = 0.0
         for n in names:
             run.attempted += 1
+            run.calibrate()
             if jobs is not None:
                 jobs[n] = f"q-{n}-{len(times[n])}"
                 run.spark.sparkContext.setJobGroup(jobs[n], n)
@@ -707,6 +744,7 @@ def check_oracles(run: Run, names, sf_dir, stage, fixed_stage) -> None:
                       "hash": table_hash(df.columns, rows)}
         except Exception as e:  # noqa: BLE001 — a failing query is a failed operation
             run.check(False, f"{n}: {type(e).__name__}: {e}"[:300])
+    run.mark("answers")
     child = subprocess.run(
         [sys.executable, os.path.join(ROOT, "perfbench", "oracle.py"), sf_dir, stage,
          fixed_stage, *got], stdout=subprocess.PIPE, text=True)
@@ -772,9 +810,15 @@ def measure(run: Run, phase, protocol: bool = False) -> dict:
     numbers; with tracing on, a second, traced phase gives the per-layer
     numbers, and a third, untraced again, brackets it, so that the tracing
     overhead is not confused with the JVM getting faster as the run goes
-    on. The last two take half as long each."""
+    on. The last two take half as long each. The reference computation is
+    timed between the operations of the untraced phase only; a few untimed
+    runs of it first let the JIT compile it."""
+    for _ in range(3):
+        run.reference()
+    run.calibrating = True
     with PeakRss() as rss:
         out = {"untraced": phase(None, run.seconds)}
+    run.calibrating = False
     run.info["driver_rss_mb"] = rss.peak / 2**20
     run.mark("measure")
     if run.trace:
@@ -806,14 +850,22 @@ def protocol_trace(run: Run, res: dict, p: Protocol) -> None:
 
 def finish(run: Run, res: dict, e2e: dict, unit: str, lat: list[float], p: Protocol | None,
            tails: dict | None = None) -> dict:
-    """Assemble end-to-end metrics, run metadata and per-layer metrics."""
+    """Assemble end-to-end metrics, run metadata and per-layer metrics.
+    The gated times are at the reference speed: the wall time divided by
+    the host's slowdown (``host_slowdown``)."""
+    slowdown = host_slowdown(run.calib)
     setup = median([s["total_s"] for s in run.setups])
+    work = median(lat)
     e2e = {
-        "setup_s": (setup, "s"),
-        "work_median_s": (median(lat), "s"),
+        "setup_s": (setup / slowdown, "s"),
+        "work_ref_s": (work / slowdown, "s"),
         "driver_rss_mb": (run.info["driver_rss_mb"], "MB"),
+        "setup_wall_s": (setup, "s"),
+        "work_wall_s": (work, "s"),
+        "host_slowdown": (slowdown, "ratio"),
         **e2e,
     }
+    run.info["reference_s"] = [round(v, 4) for v in run.calib]
     run.info["unit_of_work"] = unit
     run.info["tails"] = {}
     for name, vals in {unit: lat, **(tails or {})}.items():
@@ -831,6 +883,17 @@ def finish(run: Run, res: dict, e2e: dict, unit: str, lat: list[float], p: Proto
             op: [round(v, 4) for v in vals] for op, vals in res["untraced"]["client"].lat.items()}
         run.layer["storage.samples_files_at_end"] = len(parquet_files(p.root, "samples"))
     return e2e
+
+
+def host_slowdown(reference_s: list[float]) -> float:
+    """How much slower than the reference speed the host ran: the mean of
+    the faster half of the reference computation's times, over ``REF_S``.
+    Whatever else runs on the guest or the host (the JVM's compiler and
+    collector threads after a request, other guests) can only slow a
+    reference computation down, so the faster half tracks the host's own
+    speed; it repeated better between runs than the median did."""
+    faster = sorted(reference_s)[:max(1, len(reference_s) // 2)]
+    return sum(faster) / len(faster) / REF_S
 
 
 def tail(vals: list[float]) -> dict:
