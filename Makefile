@@ -5,7 +5,7 @@ SF_SMALL ?= /root/testdata/sf0.001
 SF_GATE  ?= /root/testdata/sf0.01
 SF_BENCH ?= /root/testdata/sf0.1
 
-.PHONY: test oracle oracle-all bench scaling efficiency write-bench serve all
+.PHONY: test oracle oracle-all bench perf scaling efficiency write-bench serve all
 
 test:
 	python -m pytest tests/ -q
@@ -20,6 +20,10 @@ oracle-all:
 
 bench:
 	SPARK_GRAFT_SF_DIR=$(SF_BENCH) python3 bench.py
+
+perf:  # the adapter benchmark (perfbench/README.md), one seeded run per gated workload
+	python3 perfbench/run.py --workload serve --seed 7 --seconds 15 --trace 0
+	python3 perfbench/run.py --workload analytics --seed 7 --seconds 15 --trace 0
 
 scaling:  # sf0.01/0.1/1 curve (generates sf1 into /tmp/phs-sf1 if missing)
 	test -f /tmp/phs-sf1/.complete || (python3 tools/gen_sf.py /tmp/phs-sf1 1.0 && touch /tmp/phs-sf1/.complete)

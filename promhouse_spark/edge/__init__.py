@@ -1,8 +1,7 @@
 """Protocol edge: everything that talks the reference's wire formats.
 
-Pure-Python, dependency-free implementations (this container has neither
-python-snappy nor protobuf): a spec-compliant snappy block codec, a
-hand-rolled protobuf wire codec for the prompb messages
+The snappy block codec wraps pyarrow's; the rest is pure Python (no
+protobuf dependency): a hand-rolled protobuf wire codec for the prompb messages
 (``prompb/prompb.proto``), the length-prefixed framed file format
 (``cmd/promload/file.go:63-108``), the Prometheus text exposition parser
 (``cmd/promload/exporter.go:96-159``), the HTTP read/write handlers

@@ -1,186 +1,52 @@
-"""Pure-Python snappy block-format codec (S3).
+"""Snappy block-format codec (S3) over ``pyarrow.Codec("snappy")``.
 
 The reference uses snappy for every wire payload (``handlers/prom.go:136-150,
-264-277``). This container ships no snappy binding, so this module implements
-the public block format (google/snappy format_description.txt):
+264-277``); SURVEY S3 keeps it an edge-layer concern. The block format
+(google/snappy format_description.txt) starts with a varint preamble that
+states the decoded size; pyarrow wants that size up front, so
+``decompress`` reads it first and checks it before allocating:
 
-- ``decompress``: complete — varint preamble + LITERAL/COPY-1/COPY-2/COPY-4
-  tags with overlapping-copy semantics;
-- ``compress``: greedy hash-table matching (the classic snappy strategy):
-  4-byte-window hashing, ≥4-byte matches emitted as COPY-1/2/4 elements
-  (including overlapping copies, so runs RLE-compress), literals between.
-  Any conforming decoder, including C++ snappy, accepts the output.
+- every element after the preamble is at least 3 bytes per 64 decoded
+  bytes (COPY-2, the densest element), so a preamble above 64/3 of the
+  remaining bytes cannot be honest and is rejected — a 10-byte body never
+  makes the server allocate gigabytes;
+- every malformed body raises ``ValueError`` (pyarrow's ``OSError``
+  included), which the HTTP layer answers with 400.
 """
 
 from __future__ import annotations
 
-try:  # optional C binding (python-snappy); absent in this container
-    import snappy as _csnappy_mod
+import pyarrow as pa
 
-    _csnappy = _csnappy_mod if hasattr(_csnappy_mod, "compress") else None
-except ImportError:
-    _csnappy = None
+_CODEC = pa.Codec("snappy")
 
 
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
+def _preamble(data: bytes) -> tuple[int, int]:
+    """The decoded size (uint32 varint) and the offset of the first element."""
+    size = shift = pos = 0
     while True:
-        if pos >= len(buf):
+        if pos >= len(data):
             raise ValueError("snappy: truncated varint")
-        b = buf[pos]
+        b = data[pos]
         pos += 1
-        result |= (b & 0x7F) << shift
+        size |= (b & 0x7F) << shift
         if not b & 0x80:
-            return result, pos
+            return size, pos
         shift += 7
-        if shift > 35:
+        if shift > 28:
             raise ValueError("snappy: varint too long")
 
 
-def _write_varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def decompress(data: bytes) -> bytes:
-    expected, pos = _read_varint(data, 0)
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        elem_type = tag & 0x03
-        if elem_type == 0:  # literal
-            length = (tag >> 2) + 1
-            if length > 60:
-                extra = length - 60
-                if pos + extra > n:
-                    raise ValueError("snappy: truncated literal length")
-                length = int.from_bytes(data[pos : pos + extra], "little") + 1
-                pos += extra
-            if pos + length > n:
-                raise ValueError("snappy: truncated literal")
-            out += data[pos : pos + length]
-            pos += length
-            continue
-        if elem_type == 1:  # copy, 1-byte offset
-            length = ((tag >> 2) & 0x07) + 4
-            if pos >= n:
-                raise ValueError("snappy: truncated copy-1")
-            offset = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif elem_type == 2:  # copy, 2-byte offset
-            length = (tag >> 2) + 1
-            if pos + 2 > n:
-                raise ValueError("snappy: truncated copy-2")
-            offset = int.from_bytes(data[pos : pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            length = (tag >> 2) + 1
-            if pos + 4 > n:
-                raise ValueError("snappy: truncated copy-4")
-            offset = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4
-        if offset == 0 or offset > len(out):
-            raise ValueError("snappy: invalid copy offset")
-        # overlapping copies are legal and byte-serial by definition
-        start = len(out) - offset
-        for i in range(length):
-            out.append(out[start + i])
-    if len(out) != expected:
-        raise ValueError(f"snappy: length mismatch: got {len(out)}, want {expected}")
-    return bytes(out)
-
-
-def _emit_literal(out: bytearray, data: bytes, start: int, end: int) -> None:
-    pos = start
-    while pos < end:
-        chunk = min(end - pos, 65536)
-        if chunk <= 60:
-            out.append((chunk - 1) << 2)
-        else:
-            length_bytes = (chunk - 1).to_bytes(4, "little")
-            # strip trailing zero bytes; tag 60+extra encodes byte count
-            while len(length_bytes) > 1 and length_bytes[-1] == 0:
-                length_bytes = length_bytes[:-1]
-            out.append((59 + len(length_bytes)) << 2)
-            out += length_bytes
-        out += data[pos : pos + chunk]
-        pos += chunk
-
-
-def _emit_copy(out: bytearray, offset: int, length: int) -> None:
-    # split into spec-sized copies; prefer COPY-1 (2 bytes) when it fits
-    while length > 0:
-        if length > 64:
-            take = 60 if length - 64 < 4 else 64  # never leave a <4 tail
-        else:
-            take = length
-        if 4 <= take <= 11 and offset < 2048:
-            out.append(0x01 | ((take - 4) << 2) | ((offset >> 8) << 5))
-            out.append(offset & 0xFF)
-        elif offset < 65536:
-            out.append(0x02 | ((take - 1) << 2))
-            out += offset.to_bytes(2, "little")
-        else:
-            out.append(0x03 | ((take - 1) << 2))
-            out += offset.to_bytes(4, "little")
-        length -= take
+    size, pos = _preamble(data)
+    rest = len(data) - pos
+    if 3 * size > 64 * rest:  # a 3-byte COPY-2 element yields at most 64 bytes
+        raise ValueError(f"snappy: preamble claims {size} bytes from {rest}")
+    try:
+        return _CODEC.decompress(data, decompressed_size=size, asbytes=True)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"snappy: {e}") from e
 
 
 def compress(data: bytes) -> bytes:
-    """Greedy hash-table matching compressor (the classic snappy strategy:
-    hash 4-byte windows, emit COPY elements for ≥4-byte matches, literals
-    between). Pure Python, ~format-typical ratios on the redundant
-    protobuf payloads the wire carries; any conforming decoder accepts
-    the output."""
-    if _csnappy is not None:  # C binding when the environment has one
-        return _csnappy.compress(data)
-    n = len(data)
-    out = bytearray(_write_varint(n))
-    if n < 4:
-        if n:
-            _emit_literal(out, data, 0, n)
-        return bytes(out)
-    table: dict[bytes, int] = {}
-    pos = 0
-    lit_start = 0
-    limit = n - 3
-    skip = 32  # C-snappy heuristic: accelerate through incompressible runs
-    while pos < limit:
-        key = data[pos : pos + 4]
-        cand = table.get(key)
-        table[key] = pos
-        if cand is None or pos - cand > 65535:
-            pos += skip >> 5
-            skip += 1
-            continue
-        skip = 32
-        # extend the match forward
-        length = 4
-        max_len = n - pos
-        while length < max_len and data[cand + length] == data[pos + length]:
-            length += 1
-        if lit_start < pos:
-            _emit_literal(out, data, lit_start, pos)
-        _emit_copy(out, pos - cand, length)
-        # index a few positions inside the match so later data can refer in
-        end = pos + length
-        step = pos + 1
-        stop = min(end, limit)
-        while step < stop:
-            table[data[step : step + 4]] = step
-            step += 1 if length < 256 else 13  # cap indexing cost on runs
-        pos = end
-        lit_start = end
-    if lit_start < n:
-        _emit_literal(out, data, lit_start, n)
-    return bytes(out)
+    return _CODEC.compress(data, asbytes=True)

@@ -643,11 +643,15 @@ def _jaccard_bitmask(
     pairs once, and intersection/sizes come from ``bit_count`` — the same
     integers the token join aggregates, so ``i/(na+nb-i)`` is the same
     double and the pair set is identical."""
+    # bit 63 is the sign bit in two's-complement LongType
     mlit = F.create_map(
         *[
             x
             for i, t in enumerate(vocab)
-            for x in (F.lit(t), F.lit(1 << i).cast("long"))
+            for x in (
+                F.lit(t),
+                F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long"),
+            )
         ]
     )
     toks = F.array_distinct(F.split(F.col(text_col), " "))

@@ -51,6 +51,12 @@ from promhouse_spark.functions.quantize import quantize
 _FIT_VIEW_IDS = itertools.count()
 
 
+def _quoted(name: str) -> str:
+    """``name`` as one quoted identifier: ``vec_col`` is a column name, so
+    a dot or backtick in it is part of the name (a backtick doubles)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def assign_with_dist(
     df: DataFrame,
     centers: list[list[float]],
@@ -66,7 +72,7 @@ def assign_with_dist(
     exceeds codegen budgets and falls back to node-at-a-time interpreted
     eval (42 s fold vs 57-60 s unrolled, both struct-min and least()
     argmins). Keep the fold."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col(_quoted(vec_col)).cast("array<double>")
     cent_arr = F.array(
         *[
             F.struct(
@@ -184,7 +190,7 @@ def assign_with_dist_exact(
         )
 
     kernel_udf = F.pandas_udf(kernel, returnType=schema)
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col(_quoted(vec_col)).cast("array<double>")
     valid = (
         v.isNotNull()
         & (F.size(v) == F.lit(dim))
@@ -253,7 +259,7 @@ def kmeans_fit(
         seeds = (
             df.orderBy(id_col)
             .limit(k)
-            .select(F.col(vec_col).cast("array<double>").alias("v"))
+            .select(F.col(_quoted(vec_col)).cast("array<double>").alias("v"))
             .collect()
         )
         centers = [[float(x) for x in r["v"]] for r in seeds]
@@ -276,7 +282,7 @@ def kmeans_fit(
     # tests/test_kmeans.py::test_means_sql_matches_column_form).
     spark = df.sparkSession
     view = f"__promhouse_kmeans_means_{next(_FIT_VIEW_IDS)}"
-    cast_v = f"CAST(`{vec_col}` AS array<double>)"
+    cast_v = f"CAST({_quoted(vec_col)} AS array<double>)"
     means_sql = (
         "SELECT centroid_id, "
         + ", ".join(
@@ -350,7 +356,7 @@ def assign_with_dist_vectorized(
     # inference for struct returns
     kernel_udf = F.pandas_udf(kernel, returnType=schema)
     out = df.withColumn(
-        "_a", kernel_udf(F.col(vec_col).cast("array<double>"))
+        "_a", kernel_udf(F.col(_quoted(vec_col)).cast("array<double>"))
     )
     return (
         out.withColumn("centroid_id", F.col("_a.centroid_id"))
@@ -392,7 +398,7 @@ def kmeans_parallel_init(
     first = (
         df.orderBy(id_col)
         .limit(1)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
+        .select(F.col(_quoted(vec_col)).cast("array<double>").alias("v"))
         .collect()
     )
     if not first:
@@ -409,7 +415,7 @@ def kmeans_parallel_init(
         )
         cand = (
             assigned.filter(draw < F.lit(float(l)) * F.col("dist") / F.lit(phi))
-            .select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
+            .select(id_col, F.col(_quoted(vec_col)).cast("array<double>").alias("v"))
             .collect()
         )
         # collect order is partitioning-dependent; candidate order feeds

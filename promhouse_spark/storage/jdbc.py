@@ -149,8 +149,8 @@ class JdbcStorage(SparkParquetStorage):
 
         return self.spark.createDataFrame([], EXEMPLARS_SCHEMA)
 
-    def _histograms_for(self, q) -> list[tuple]:
-        return []  # no histogram tier (see histograms_df)
+    def has_histograms(self) -> bool:
+        return False  # no histogram tier (see histograms_df)
 
     def _existing_fingerprints(self) -> DataFrame:
         df = self._read_table(REGISTRY_TABLE)
@@ -181,7 +181,6 @@ class JdbcStorage(SparkParquetStorage):
             .mode("append")
             .save()
         )
-        self._drop_recent_cache()
 
     def compact_samples(self, files_per_day: int = 1) -> None:
         """No-op: table maintenance belongs to the database (ClickHouse's

@@ -14,7 +14,13 @@ Re-expresses the reference's ClickHouse backend
   ``clickhouse.go:99-101``);
 - reads: matcher resolution → IN-list or left-semi strategy at the
   reference's threshold (default 50, ``cmd/promhouse/main.go:198``) →
-  group-into-series (``clickhouse.go:235-280``);
+  group-into-series (``clickhouse.go:235-280``). With the cached registry
+  there is one series-read plan (``_series_plan``): every query's
+  restricted scan tagged with its slot index, unioned and grouped once;
+  ``read()`` collects it and the streamed ``iter_series`` range-sorts it
+  and pulls it with ``toLocalIterator``. Rows become ``TimeSeries`` in one
+  converter (``_series``), merged with native histograms by fingerprint.
+  Reads always scan the stored tiers: no cache outlives its query;
 - raw-SQL passthrough (``clickhouse.go:372-388``) against the registered
   ``time_series`` / ``samples`` temp views.
 
@@ -27,8 +33,10 @@ resolution runs fully distributed (``plans.read.select_series``).
 
 from __future__ import annotations
 
+import functools
+import itertools
 import os
-from typing import Sequence
+from typing import Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -68,6 +76,37 @@ from promhouse_spark.storage.base import Storage
 #: 5.9 GB RSS, 106 s reload). 2M keeps the driver under ~2.4 GB and inside
 #: the regime where the cache still wins.
 DEFAULT_REGISTRY_CACHE_MAX_SERIES = 2_000_000
+
+
+def _series(labels: dict, samples=(), histograms=()) -> TimeSeries:
+    """The one place a read result becomes a ``TimeSeries``: sorted labels,
+    ``(timestamp_ms, value)`` sample pairs, native histograms."""
+    return TimeSeries(
+        labels=[Label(n, v) for n, v in sorted(labels.items())],
+        samples=[Sample(value=v, timestamp_ms=t) for t, v in samples],
+        histograms=list(histograms),
+    )
+
+
+def _merge_series(
+    rows: Iterable[tuple[int, dict, list]], hseries: list[tuple[int, dict, list]]
+) -> Iterator[TimeSeries]:
+    """Merge unsigned-fingerprint-ordered float rows ``(ufp, labels,
+    samples)`` with the same query's histogram series ``(ufp, labels,
+    histograms)``: a series with both carries both, native-only series
+    slot in by fingerprint, so the output keeps the read order."""
+    hi = 0
+    for ufp, labels, samples in rows:
+        while hi < len(hseries) and hseries[hi][0] < ufp:
+            yield _series(hseries[hi][1], (), hseries[hi][2])
+            hi += 1
+        hists = ()
+        if hi < len(hseries) and hseries[hi][0] == ufp:
+            hists = hseries[hi][2]
+            hi += 1
+        yield _series(labels, samples, hists)
+    for _ufp, labels, hists in hseries[hi:]:
+        yield _series(labels, (), hists)
 
 
 class SparkParquetStorage(Storage):
@@ -417,16 +456,6 @@ class SparkParquetStorage(Storage):
             .mode("append")
             .parquet(self.samples_path)
         )
-        self._drop_recent_cache()
-
-    def _drop_recent_cache(self) -> None:
-        """A pinned recent-window cache is a snapshot — drop it after any
-        mutation so reads keep read-your-own-writes; deployments re-pin on a
-        timer."""
-        cache = getattr(self, "_recent_cache", None)
-        if cache is not None:
-            cache.unpersist()
-            self._recent_cache = None
 
     def compact_samples(self, files_per_day: int = 1) -> None:
         """Rewrite the fact table with consolidated, fully-clustered files —
@@ -471,7 +500,6 @@ class SparkParquetStorage(Storage):
         fs.rename(self.spark, self.samples_path, old)
         fs.rename(self.spark, tmp, self.samples_path)
         fs.delete(self.spark, old)
-        self._drop_recent_cache()
 
     def retention_sweep(
         self, keep_days: int, now_ms: int | None = None
@@ -513,8 +541,6 @@ class SparkParquetStorage(Storage):
                 if part_date < cutoff:
                     fs.delete(self.spark, os.path.join(root, name))
                     dropped.append(name)
-        if dropped:
-            self._drop_recent_cache()
         return dropped
 
     def _date_partitioned_tiers(self) -> tuple[str, ...]:
@@ -554,7 +580,6 @@ class SparkParquetStorage(Storage):
         n = matched.count()
         if n:
             t.coalesce(1).write.mode("append").parquet(self.tombstones_path)
-            self._drop_recent_cache()
         return n
 
     def clean_tombstones(self, files_per_day: int = 1) -> dict[str, int]:
@@ -651,7 +676,6 @@ class SparkParquetStorage(Storage):
                 fs.delete(self.spark, root)
             rewritten[os.path.basename(root)] = len(affected)
         fs.delete(self.spark, self.tombstones_path)
-        self._drop_recent_cache()
         return rewritten
 
     def snapshot(self, name: str | None = None) -> str:
@@ -777,20 +801,13 @@ class SparkParquetStorage(Storage):
         restricted = restrict_to_series(windowed, fps, self.max_series_inlist)
         rows = merge_rollup(restricted).collect()
         rows.sort(key=lambda r: (to_unsigned64(r[FINGERPRINT]), r["window_start_ms"]))
-        out: dict[int, TimeSeries] = {}
-        for r in rows:
-            fp = r[FINGERPRINT]
-            ts = out.get(fp)
-            if ts is None:
-                labels = self._registry.get(to_unsigned64(fp), {})
-                ts = TimeSeries(
-                    labels=[Label(n, v) for n, v in sorted(labels.items())], samples=[]
-                )
-                out[fp] = ts
-            ts.samples.append(
-                Sample(value=float(r[value_col]), timestamp_ms=r["window_start_ms"])
+        return [
+            _series(
+                self._registry.get(to_unsigned64(fp), {}),
+                [(r["window_start_ms"], float(r[value_col])) for r in group],
             )
-        return list(out.values())
+            for fp, group in itertools.groupby(rows, key=lambda r: r[FINGERPRINT])
+        ]
 
     def distributed_read_plan(self, q: Query, samples=None):
         """Build the fully-distributed read plan for one query: matcher
@@ -808,46 +825,6 @@ class SparkParquetStorage(Storage):
             samples_in_range(samples, q.start_ms, q.end_ms), series
         )
         return group_into_series(restricted).join(series, FINGERPRINT, "inner")
-
-    def _histograms_for(self, q: Query, fps=None) -> list[tuple]:
-        """(fingerprint, labels, NativeHistogram) rows in range for
-        read() attachment — empty when the tier is absent. Bounded by
-        matched native-series cardinality (API-edge contract).
-
-        ``fps``: optional pre-resolved fingerprint list (cached-registry
-        callers like ``iter_series``) — matcher evaluation then stays in
-        Python and labels come from the registry cache, so no Java regex
-        or distributed matcher error can fire from inside a streaming
-        generator after response headers are out."""
-        from promhouse_spark.plans.read import select_series
-
-        if not self.has_histograms():
-            return []
-        hf = self.histograms_range_df(q.start_ms, q.end_ms)
-        if fps is not None:
-            if not fps:
-                return []
-            hf = restrict_to_series(hf, fps, self.max_series_inlist)
-            rows = hf.collect()
-            rows.sort(
-                key=lambda r: (to_unsigned64(r[FINGERPRINT]), r[TIMESTAMP_MS])
-            )
-            return [
-                (
-                    r[FINGERPRINT],
-                    dict(self._registry.get(to_unsigned64(r[FINGERPRINT]), {})),
-                    self._histogram_from_row(r),
-                )
-                for r in rows
-            ]
-        matched = select_series(self.registry_df(), q.matchers)
-        hf = restrict_to_series(hf, matched.select(FINGERPRINT))
-        rows = hf.join(matched, FINGERPRINT).collect()
-        rows.sort(key=lambda r: (to_unsigned64(r[FINGERPRINT]), r[TIMESTAMP_MS]))
-        return [
-            (r[FINGERPRINT], dict(r[LABELS]), self._histogram_from_row(r))
-            for r in rows
-        ]
 
     @staticmethod
     def _histogram_from_row(r):
@@ -868,116 +845,74 @@ class SparkParquetStorage(Storage):
         """One query's native-histogram data grouped per series, in
         unsigned-fingerprint order: ``[(ufp, labels_dict,
         [NativeHistogram...])]`` with each series' histograms
-        timestamp-sorted. The streamed remote-read path merges this
-        (driver-resident, bounded by matched native-series cardinality —
-        the `_histograms_for` API-edge contract) against its
-        fingerprint-ordered float stream so histogram series ride the
-        chunked response instead of forcing a sampled fallback."""
+        timestamp-sorted; empty when the tier is absent. Driver-resident,
+        bounded by matched native-series cardinality (the API-edge
+        contract); both read paths merge it against their
+        fingerprint-ordered float series (:func:`_merge_series`).
+
+        ``fps``: optional pre-resolved fingerprint list (cached-registry
+        callers) — matcher evaluation then stays in Python and labels come
+        from the registry cache, so no Java regex or distributed matcher
+        error can fire from inside a streaming generator after response
+        headers are out."""
+        from promhouse_spark.plans.read import select_series
+
+        if not self.has_histograms():
+            return []
+        hf = self.histograms_range_df(q.start_ms, q.end_ms)
+        if fps is not None:
+            if not fps:
+                return []
+            rows = restrict_to_series(hf, fps, self.max_series_inlist).collect()
+        else:
+            matched = select_series(self.registry_df(), q.matchers)
+            hf = restrict_to_series(hf, matched.select(FINGERPRINT))
+            rows = hf.join(matched, FINGERPRINT).collect()
+        rows.sort(key=lambda r: (to_unsigned64(r[FINGERPRINT]), r[TIMESTAMP_MS]))
         out: list[tuple[int, dict, list]] = []
-        for fp, labels, hist in self._histograms_for(q, fps):
-            ufp = to_unsigned64(fp)
-            if out and out[-1][0] == ufp:
-                out[-1][2].append(hist)
-            else:
-                out.append((ufp, labels, [hist]))
+        for r in rows:
+            ufp = to_unsigned64(r[FINGERPRINT])
+            if not out or out[-1][0] != ufp:
+                labels = self._registry.get(ufp, {}) if fps is not None else r[LABELS]
+                out.append((ufp, dict(labels), []))
+            out[-1][2].append(self._histogram_from_row(r))
         return out
 
-    def _attach_histograms(self, q: Query, res: list[TimeSeries]) -> list[TimeSeries]:
-        """Merge the query's native histograms into the float read result
-        (modern prompb TimeSeries carries both sample types); native-only
-        series append as new entries. Result stays sorted by unsigned
-        fingerprint, the read() output contract."""
-        hrows = self._histograms_for(q)
-        if not hrows:
-            return res
-        by_fp: dict[int, TimeSeries] = {}
-        for ts in res:
-            fp = to_signed64(
-                fingerprint((l.name, l.value) for l in ts.labels)
-            )
-            by_fp[fp] = ts
-        for fp, labels, hist in hrows:
-            ts = by_fp.get(fp)
-            if ts is None:
-                ts = TimeSeries(
-                    labels=[Label(n, v) for n, v in sorted(labels.items())]
-                )
-                by_fp[fp] = ts
-                res.append(ts)
-            ts.histograms.append(hist)
-        res.sort(key=lambda ts: fingerprint((l.name, l.value) for l in ts.labels))
-        return res
-
     def read(self, queries: Sequence[Query]) -> list[list[TimeSeries]]:
+        """Order-preserving, one result per query, each sorted by unsigned
+        fingerprint. With the cached registry every query (one or many)
+        goes through :meth:`_series_plan`, collected once; without it each
+        query runs :meth:`distributed_read_plan`."""
         sql = rawsql_text(queries)
         if sql is not None:
             self._register_views_for_sql(sql)
             return [run_rawsql(self.spark, sql, queries[0].end_ms)]
-        if self.cache_registry and len(queries) > 1:
-            # multi-query requests collapse into ONE Spark job (union of
-            # per-query restricted scans tagged with the slot index) —
-            # Prometheus remote-read latency scales with jobs, not rows
-            return [
-                self._attach_histograms(q, res)
-                for q, res in zip(queries, self._read_batched(queries))
+        if self.cache_registry:
+            fps = [self._resolve_fingerprints(q) for q in queries]
+            floats: list[list[tuple[int, dict, list]]] = [[] for _ in queries]
+            grouped = self._series_plan(queries, fps)
+            if grouped is not None:
+                # one collect for every query: remote-read latency scales
+                # with Spark jobs, not rows
+                for r in grouped.collect():
+                    floats[r["qidx"]].append(self._cached_row(r))
+            hists = [self.histogram_series(q, f) for q, f in zip(queries, fps)]
+        else:
+            floats = [
+                [
+                    (to_unsigned64(r[FINGERPRINT]), r[LABELS], r["samples"])
+                    for r in self.distributed_read_plan(q).collect()
+                ]
+                for q in queries
             ]
-
-        results: list[list[TimeSeries]] = []
-        cold = self.samples_df()
-        recent = getattr(self, "_recent_cache", None)
-        recent_start = getattr(self, "_recent_start_ms", None)
-        for q in queries:
-            # serve fully-recent windows from the pinned cache (risk-7 path)
-            samples = (
-                recent
-                if recent is not None and recent_start is not None and q.start_ms >= recent_start
-                else cold
-            )
-            if self.cache_registry:
-                fps = self._resolve_fingerprints(q)
-                if not fps:  # O3 short-circuit (clickhouse.go:405-407)
-                    results.append([])
-                    continue
-                # through _restricted_scan so a chunked tier prunes whole
-                # chunks below the decode barrier on this path too
-                restricted = self._restricted_scan(samples, q, fps)
-                label_of = {
-                    fp: self._registry[to_unsigned64(fp)] for fp in fps
-                }
-                rows = group_into_series(restricted).collect()
-                rows.sort(key=lambda r: to_unsigned64(r[FINGERPRINT]))
-                res = [
-                    TimeSeries(
-                        labels=[
-                            Label(n, v)
-                            for n, v in sorted(label_of[r[FINGERPRINT]].items())
-                        ],
-                        samples=[
-                            Sample(value=s[VALUE], timestamp_ms=s[TIMESTAMP_MS])
-                            for s in r["samples"]
-                        ],
-                    )
-                    for r in rows
-                ]
-            else:
-                rows = self.distributed_read_plan(q, samples).collect()
-                rows.sort(key=lambda r: to_unsigned64(r[FINGERPRINT]))
-                res = [
-                    TimeSeries(
-                        labels=[Label(n, v) for n, v in sorted(r[LABELS].items())],
-                        samples=[
-                            Sample(value=s[VALUE], timestamp_ms=s[TIMESTAMP_MS])
-                            for s in r["samples"]
-                        ],
-                    )
-                    for r in rows
-                ]
-            results.append(self._attach_histograms(q, res))
-        return results
+            hists = [self.histogram_series(q) for q in queries]
+        for f in floats:
+            f.sort(key=lambda row: row[0])
+        return [list(_merge_series(f, h)) for f, h in zip(floats, hists)]
 
     def iter_series(self, q: Query):
-        """Memory-bounded streamed serve of one query: the grouped-series
-        frame range-sorted in unsigned-fingerprint order and pulled with
+        """Memory-bounded streamed serve of one query: :meth:`_series_plan`
+        range-sorted in unsigned-fingerprint order and pulled with
         ``toLocalIterator`` — ONE series on the driver at a time, framed
         incrementally by the already-streaming remote-read generator
         (edge/http.py). ``read()`` keeps the reference's materialize-all
@@ -989,69 +924,20 @@ class SparkParquetStorage(Storage):
         if not self.cache_registry:
             raise ValueError("iter_series requires cache_registry")
         fps = self._resolve_fingerprints(q)
-        # native-histogram series for the same matchers, merged into the
-        # float stream by unsigned fingerprint (driver-resident but
-        # bounded by native cardinality); resolution reuses the cached-
-        # registry fps so no Java-regex matcher runs after headers
+        # native-histogram series for the same fps, merged into the float
+        # stream by unsigned fingerprint (driver-resident but bounded by
+        # native cardinality)
         hseries = self.histogram_series(q, fps=fps)
-        if not fps and not hseries:
-            return
-
-        def hist_only(entry):
-            ufp, labels, hists = entry
-            return TimeSeries(
-                labels=[Label(n, v) for n, v in sorted(labels.items())],
-                histograms=hists,
+        grouped = self._series_plan([q], [fps])
+        rows = ()
+        if grouped is not None:
+            rows = (
+                self._cached_row(r)
+                for r in grouped.sort(
+                    (F.col(FINGERPRINT) < 0).cast("int"), FINGERPRINT
+                ).toLocalIterator()
             )
-
-        hi = 0
-        if fps:
-            restricted = self._restricted_scan(self.samples_df(), q, fps)
-            grouped = group_into_series(restricted).sort(
-                (F.col(FINGERPRINT) < 0).cast("int"), FINGERPRINT
-            )
-            label_of = {fp: self._registry[to_unsigned64(fp)] for fp in fps}
-            for r in grouped.toLocalIterator():
-                ufp = to_unsigned64(r[FINGERPRINT])
-                while hi < len(hseries) and hseries[hi][0] < ufp:
-                    yield hist_only(hseries[hi])
-                    hi += 1
-                hists = []
-                if hi < len(hseries) and hseries[hi][0] == ufp:
-                    hists = hseries[hi][2]
-                    hi += 1
-                yield TimeSeries(
-                    labels=[
-                        Label(n, v)
-                        for n, v in sorted(label_of[r[FINGERPRINT]].items())
-                    ],
-                    samples=[
-                        Sample(value=s[VALUE], timestamp_ms=s[TIMESTAMP_MS])
-                        for s in r["samples"]
-                    ],
-                    histograms=hists,
-                )
-        while hi < len(hseries):
-            yield hist_only(hseries[hi])
-            hi += 1
-
-    def cache_recent(self, days: int = 2) -> None:
-        """Pin the hottest day partitions in executor memory (SURVEY §7 risk
-        7: remote-read is latency-sensitive; Prometheus mostly reads the
-        recent window). Reads hit the cached partitions without touching
-        parquet; older windows still scan (and partition-prune) normally."""
-        samples = self.samples_df()
-        if DATE not in samples.columns:
-            return
-        import time as _time
-
-        cutoff_ms = (int(_time.time() * 1000) // 86_400_000 - days) * 86_400_000
-        recent = samples.filter(
-            F.col(DATE) >= F.to_date(F.timestamp_millis(F.lit(cutoff_ms)))
-        ).cache()
-        recent.count()  # materialize
-        self._recent_cache = recent
-        self._recent_start_ms = cutoff_ms
+        yield from _merge_series(rows, hseries)
 
     def _restricted_scan(self, samples: DataFrame, q: Query, fps) -> DataFrame:
         """One query's restricted fact scan (F2 + J1/J2) — the layout seam:
@@ -1063,52 +949,33 @@ class SparkParquetStorage(Storage):
             self.max_series_inlist,
         )
 
-    def _read_batched(self, queries: Sequence[Query]) -> list[list[TimeSeries]]:
-        """O1 as a single job: per-query restricted scans, each tagged with
-        its slot index, unioned and grouped once. Order preserved; empty
-        slots stay empty."""
-        cold = self.samples_df()
-        recent = getattr(self, "_recent_cache", None)
-        recent_start = getattr(self, "_recent_start_ms", None)
-        per_query: list[tuple[int, list[int]]] = []
-        branches = []
-        for idx, q in enumerate(queries):
-            fps = self._resolve_fingerprints(q)
-            per_query.append((idx, fps))
-            if not fps:
-                continue
-            samples = (
-                recent
-                if recent is not None and recent_start is not None and q.start_ms >= recent_start
-                else None
-            )
-            branch = self._restricted_scan(samples if samples is not None else cold, q, fps).select(
-                F.lit(idx).alias("qidx"), FINGERPRINT, TIMESTAMP_MS, VALUE
-            )
-            branches.append(branch)
-        results: list[list[TimeSeries]] = [[] for _ in queries]
+    def _series_plan(self, queries: Sequence[Query], fps: Sequence[list[int]]):
+        """The one cached-registry series read (O1): each query's restricted
+        scan tagged with its slot index ``qidx``, unioned and grouped once
+        into (qidx, fingerprint, time-sorted samples) rows. ``None`` when no
+        query matched a series."""
+        branches = [
+            (i, q, f) for i, (q, f) in enumerate(zip(queries, fps)) if f
+        ]
         if not branches:
-            return results
-        union = branches[0]
-        for b in branches[1:]:
-            union = union.unionByName(b)
-        grouped = union.groupBy("qidx", FINGERPRINT).agg(
+            return None
+        samples = self.samples_df()
+        union = functools.reduce(
+            DataFrame.unionByName,
+            (
+                self._restricted_scan(samples, q, f).select(
+                    F.lit(i).alias("qidx"), FINGERPRINT, TIMESTAMP_MS, VALUE
+                )
+                for i, q, f in branches
+            ),
+        )
+        return union.groupBy("qidx", FINGERPRINT).agg(
             F.sort_array(F.collect_list(F.struct(TIMESTAMP_MS, VALUE))).alias("samples")
         )
-        rows = grouped.collect()
-        rows.sort(key=lambda r: (r["qidx"], to_unsigned64(r[FINGERPRINT])))
-        for r in rows:
-            labels = self._registry.get(to_unsigned64(r[FINGERPRINT]), {})
-            results[r["qidx"]].append(
-                TimeSeries(
-                    labels=[Label(n, v) for n, v in sorted(labels.items())],
-                    samples=[
-                        Sample(value=s[VALUE], timestamp_ms=s[TIMESTAMP_MS])
-                        for s in r["samples"]
-                    ],
-                )
-            )
-        return results
+
+    def _cached_row(self, r) -> tuple[int, dict, list]:
+        ufp = to_unsigned64(r[FINGERPRINT])
+        return ufp, self._registry.get(ufp, {}), r["samples"]
 
     # ------------------------------------------------------------ analytics
 

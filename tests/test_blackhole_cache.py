@@ -1,4 +1,4 @@
-"""Blackhole backend (S14) + recent-window read cache (SURVEY §7 risk 7)."""
+"""Blackhole backend (S14) + read-your-own-writes on the parquet backend."""
 
 import time
 
@@ -23,18 +23,15 @@ def _now_series(name, offset_ms, value):
     ), now
 
 
-def test_cache_recent_serves_and_invalidates(spark, tmp_path):
+def test_read_your_own_writes(spark, tmp_path):
     st = SparkParquetStorage(spark, str(tmp_path / "store"))
     ts, now = _now_series("hot", -1000, 1.0)
     st.write([ts])
-    st.cache_recent(days=2)
-    assert st._recent_cache is not None
     q = Query(now - 3_600_000, now + 3_600_000, make_matchers(("__name__", "=", "hot")))
     [series] = st.read([q])
     assert len(series) == 1 and series[0].samples[0].value == 1.0
-    # a write must invalidate the snapshot so new samples stay visible
+    # every read scans the stored tiers, so a second write is visible at once
     ts2, _ = _now_series("hot", -500, 2.0)
     st.write([ts2])
-    assert getattr(st, "_recent_cache", None) is None
     [series] = st.read([q])
     assert sorted(s.value for s in series[0].samples) == [1.0, 2.0]

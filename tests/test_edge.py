@@ -53,6 +53,62 @@ def test_snappy_rejects_garbage():
         snappy_codec.decompress(bytes([4, 1, 9]))  # copy offset beyond output
 
 
+def _uvarint(n: int) -> bytes:
+    out = bytearray()
+    while n >= 0x80:
+        out.append((n & 0x7F) | 0x80)
+        n >>= 7
+    out.append(n)
+    return bytes(out)
+
+
+def _copy2_stream(n_copies: int) -> tuple[bytes, bytes]:
+    """The densest legal snappy elements: a 1-byte literal, then COPY-2
+    elements of 64 bytes each at offset 1. Returns (elements, decoded)."""
+    elements = bytes([0, ord("x")]) + bytes([0x02 | (63 << 2), 1, 0]) * n_copies
+    return elements, b"x" * (1 + 64 * n_copies)
+
+
+def _bound(elements: bytes) -> int:
+    return 64 * len(elements) // 3
+
+
+def test_snappy_preamble_past_bound_rejected():
+    elements, _ = _copy2_stream(5)
+    # the claim is refused before anything is allocated
+    with pytest.raises(ValueError, match="preamble"):
+        snappy_codec.decompress(_uvarint(_bound(elements) + 1) + elements)
+    # a 10-byte body claiming 4 GiB
+    with pytest.raises(ValueError, match="preamble"):
+        snappy_codec.decompress(_uvarint(2**32 - 1) + b"\x00" * 5)
+
+
+def test_snappy_copy2_stream_decodes_at_bound():
+    for n in (1, 5, 1000):
+        elements, decoded = _copy2_stream(n)
+        assert snappy_codec.decompress(_uvarint(len(decoded)) + elements) == decoded
+        # the literal costs 2 bytes for 1, so the densest legal stream sits
+        # just under the bound; a claim AT the bound passes the check and is
+        # then refused by the decoder for its length, still as ValueError
+        assert 0 <= _bound(elements) - len(decoded) < 43
+        with pytest.raises(ValueError, match="snappy: (?!preamble)"):
+            snappy_codec.decompress(_uvarint(_bound(elements)) + elements)
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        _uvarint(2**31) + b"\x00" * 8,  # oversized claim
+        snappy_codec.compress(b"\x0a\x02hi" * 50)[:-3],  # truncated elements
+        _uvarint(8) + bytes([(4 - 1) << 2]) + b"abcd" + bytes([0x01, 9]),  # bad offset
+    ],
+    ids=["oversized", "truncated", "bad-offset"],
+)
+def test_http_bad_snappy_is_400(client, body):
+    assert client.post("/write", data=body).status_code == 400
+    assert client.post("/read", data=body).status_code == 400
+
+
 # ------------------------------------------------------------------- prompb
 
 

@@ -285,3 +285,16 @@ def test_means_sql_matches_column_form(spark, sf_dir):
     )
     spark.catalog.dropTempView("__t_means_sql")
     assert col_form == sql_form  # exact equality, doubles included
+
+
+def test_fit_on_column_name_with_backtick(spark):
+    """The re-center step quotes the vector column inside SQL text; a
+    backtick in the name must be doubled there, so a fit on such a column
+    equals the fit on the same data under a plain name."""
+    df = _planted(spark)
+    odd = df.withColumnRenamed("embedding", "emb`x")
+    centers = kmeans_fit(odd, k=2, iters=3, vec_col="emb`x")
+    assert centers == kmeans_fit(df, k=2, iters=3)
+    got = assign_with_dist(odd, centers, "emb`x").select("vec_id", "centroid_id")
+    want = assign_with_dist(df, centers).select("vec_id", "centroid_id")
+    assert sorted(got.collect()) == sorted(want.collect())

@@ -559,6 +559,39 @@ def test_jaccard_bitmask_gates(spark):
     assert (1, 5) not in pairs  # no shared token → absent, token-join semantics
 
 
+@pytest.mark.parametrize("n_tokens", [63, 64, 65])
+def test_jaccard_bitmask_vocabulary_boundary(spark, n_tokens):
+    """At 64 tokens the last token owns bit 63, the sign bit of a long; the
+    bitmask path must build that literal and give the token join's pairs.
+    At 65 the vocabulary sniff declines and the token join answers."""
+    import random
+
+    rng = random.Random(n_tokens)
+    vocab = [f"w{i}" for i in range(n_tokens)]
+    rows = [(i, " ".join(vocab[i::8]), "s") for i in range(8)]  # covers the vocabulary
+    rows += [
+        (8 + i, " ".join(rng.sample(vocab, rng.randint(3, 12)) + vocab[-2:]), "s")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    sniffed = D._small_vocabulary(df, "text", 64)
+    assert (sniffed is None) == (n_tokens > 64)
+
+    def pairs(bitmask):
+        return sorted(
+            map(
+                tuple,
+                D.ngram_jaccard_pairs(
+                    df, group_col="source", threshold=0.2, bitmask=bitmask
+                ).collect(),
+            )
+        )
+
+    plain, fast = pairs(False), pairs(True)
+    assert fast == plain
+    assert len(plain) > 0
+
+
 def _zipf_corpus(spark, n_docs=120, vocab=400, seed=3):
     import random
 

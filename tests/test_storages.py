@@ -254,3 +254,40 @@ def test_jdbc_filters_pushed_to_database(spark):
     assert "JDBCRelation" in plan
     pushed = plan.split("PushedFilters")[1][:300]
     assert "timestamp_ms" in pushed and "fingerprint" in pushed
+
+
+def test_jdbc_streamed_read_over_http(spark):
+    """A streamed remote-read (STREAMED_XOR_CHUNKS, the ``iter_series``
+    path) on the JDBC backend: the written series come back whole. The
+    JDBC layout has no histogram tier, so nothing may probe one from
+    inside the stream, where a failure would follow the 200 header."""
+    import uuid
+
+    pytest.importorskip("flask")
+    from promhouse_spark.edge import chunkenc, prompb, snappy_codec
+    from promhouse_spark.edge.http import create_app
+    from promhouse_spark.storage.jdbc import DERBY_DRIVER, JdbcStorage, derby_memory_url
+
+    st = JdbcStorage(
+        spark, derby_memory_url(f"stream{uuid.uuid4().hex[:8]}"), driver=DERBY_DRIVER
+    )
+    app = create_app(st)
+    app.testing = True
+    client = app.test_client()
+    body = snappy_codec.compress(prompb.encode_write_request(get_data()))
+    assert client.post("/write", data=body).status_code == 200
+
+    q = Query(*WINDOW, make_matchers(("__name__", "=", "http_requests_total")))
+    rq = snappy_codec.compress(
+        prompb.encode_read_request_full([q], [prompb.RESPONSE_TYPE_STREAMED_XOR_CHUNKS])
+    )
+    resp = client.post("/read", data=rq)
+    assert resp.status_code == 200
+    got = []
+    for payload in chunkenc.iter_frames(resp.data):
+        series, qi = prompb.decode_chunked_read_response(payload)
+        assert qi == 0
+        for labels, chunks in series:
+            samples = [s for _, _, _, d in chunks for s in chunkenc.decode_xor_chunk(d)]
+            got.append((tuple((l.name, l.value) for l in labels), tuple(samples)))
+    assert sorted(got) == normalize(get_data())
